@@ -47,6 +47,7 @@ import pandas as pd
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def _lit(x):
@@ -530,16 +531,46 @@ def _i64(arr_u64: np.ndarray) -> pd.Series:
 # S2 — Column-level entry points
 # ---------------------------------------------------------------------------
 
-def _geo_to_s2(lon, lat) -> Column:
-    @F.pandas_udf("long")
-    def k(lo: pd.Series, la: pd.Series) -> pd.Series:
-        return _i64(
-            _s2_leaf_from_deg(
-                lo.to_numpy(dtype=np.float64), la.to_numpy(dtype=np.float64)
-            )
-        )
+# Arrow-batched S2 kernels, shared by the Column API below and the SQL
+# surface (sql_kernels)
 
-    return k(_lit(lon).cast("double"), _lit(lat).cast("double"))
+@F.pandas_udf(T.LongType())
+def geoToS2(lo: pd.Series, la: pd.Series) -> pd.Series:
+    return _i64(
+        _s2_leaf_from_deg(
+            lo.to_numpy(dtype=np.float64), la.to_numpy(dtype=np.float64)
+        )
+    )
+
+
+@F.pandas_udf(T.ArrayType(T.LongType()))
+def s2GetNeighbors(c: pd.Series) -> pd.Series:
+    ns = _s2_edge_neighbors(_u64(c))
+    stacked = np.stack([n.view(np.int64) for n in ns], axis=1)
+    return pd.Series(list(stacked))
+
+
+@F.pandas_udf(T.BooleanType())
+def s2CellsIntersect(sa: pd.Series, sb: pd.Series) -> pd.Series:
+    ua, ub = _u64(sa), _u64(sb)
+    la, lb = _s2_lsb(ua) - np.uint64(1), _s2_lsb(ub) - np.uint64(1)
+    hit = (ua - la <= ub + lb) & (ub - lb <= ua + la)
+    # NULL in -> NULL out (the na_value=0 fill would otherwise claim
+    # every cell intersects the "zero cell")
+    out = pd.Series(hit, dtype="object")
+    out[sa.isna().to_numpy() | sb.isna().to_numpy()] = None
+    return out
+
+
+@F.pandas_udf(T.BooleanType())
+def s2CapContains(c: pd.Series, d: pd.Series, p: pd.Series) -> pd.Series:
+    ang = np.degrees(_s2_angle_between_ids(_u64(c), _u64(p)))
+    deg = d.to_numpy(dtype=np.float64)
+    return pd.Series((deg >= 0) & (ang <= deg))
+
+
+def _geo_to_s2(lon, lat) -> Column:
+    return geoToS2(_lit(lon).cast("double"), _lit(lat).cast("double"))
 
 
 def _s2_to_geo(cid) -> Column:
@@ -552,38 +583,15 @@ def _s2_to_geo(cid) -> Column:
 
 
 def _s2_get_neighbors(cid) -> Column:
-    @F.pandas_udf("array<long>")
-    def k(c: pd.Series) -> pd.Series:
-        ns = _s2_edge_neighbors(_u64(c))
-        stacked = np.stack([n.view(np.int64) for n in ns], axis=1)
-        return pd.Series(list(stacked))
-
-    return k(_lit(cid).cast("long"))
+    return s2GetNeighbors(_lit(cid).cast("long"))
 
 
 def _s2_cells_intersect(a, b) -> Column:
-    @F.pandas_udf("boolean")
-    def k(sa: pd.Series, sb: pd.Series) -> pd.Series:
-        ua, ub = _u64(sa), _u64(sb)
-        la, lb = _s2_lsb(ua) - np.uint64(1), _s2_lsb(ub) - np.uint64(1)
-        hit = (ua - la <= ub + lb) & (ub - lb <= ua + la)
-        # NULL in -> NULL out (the na_value=0 fill would otherwise claim
-        # every cell intersects the "zero cell")
-        out = pd.Series(hit, dtype="object")
-        out[sa.isna().to_numpy() | sb.isna().to_numpy()] = None
-        return out
-
-    return k(_lit(a).cast("long"), _lit(b).cast("long"))
+    return s2CellsIntersect(_lit(a).cast("long"), _lit(b).cast("long"))
 
 
 def _s2_cap_contains(center, degrees, point) -> Column:
-    @F.pandas_udf("boolean")
-    def k(c: pd.Series, d: pd.Series, p: pd.Series) -> pd.Series:
-        ang = np.degrees(_s2_angle_between_ids(_u64(c), _u64(p)))
-        deg = d.to_numpy(dtype=np.float64)
-        return pd.Series((deg >= 0) & (ang <= deg))
-
-    return k(
+    return s2CapContains(
         _lit(center).cast("long"),
         _lit(degrees).cast("double"),
         _lit(point).cast("long"),
@@ -953,36 +961,10 @@ def sql_kernels() -> dict:
     """SQL-registrable pandas UDFs for the kernel-backed geo names, so
     the CH SQL frontend can call them (spark.udf.register keeps them
     Arrow-batched — same execution shape as the Column API)."""
-    @F.pandas_udf("long")
-    def geoToS2(lo: pd.Series, la: pd.Series) -> pd.Series:
-        return _i64(_s2_leaf_from_deg(
-            lo.to_numpy(dtype=np.float64), la.to_numpy(dtype=np.float64)))
-
     @F.pandas_udf("col1 double, col2 double")
     def s2ToGeo(c: pd.Series) -> pd.DataFrame:
         lon, lat = _s2_deg_from_id(_u64(c))
         return pd.DataFrame({"col1": lon, "col2": lat})
-
-    @F.pandas_udf("boolean")
-    def s2CellsIntersect(sa: pd.Series, sb: pd.Series) -> pd.Series:
-        ua, ub = _u64(sa), _u64(sb)
-        la, lb = _s2_lsb(ua) - np.uint64(1), _s2_lsb(ub) - np.uint64(1)
-        hit = (ua - la <= ub + lb) & (ub - lb <= ua + la)
-        out = pd.Series(hit, dtype="object")
-        out[sa.isna().to_numpy() | sb.isna().to_numpy()] = None
-        return out
-
-    @F.pandas_udf("array<long>")
-    def s2GetNeighbors(c: pd.Series) -> pd.Series:
-        ns = _s2_edge_neighbors(_u64(c))
-        return pd.Series(list(np.stack(
-            [n.view(np.int64) for n in ns], axis=1)))
-
-    @F.pandas_udf("boolean")
-    def s2CapContains(c: pd.Series, d: pd.Series, p: pd.Series) -> pd.Series:
-        ang = np.degrees(_s2_angle_between_ids(_u64(c), _u64(p)))
-        deg = d.to_numpy(dtype=np.float64)
-        return pd.Series((deg >= 0) & (ang <= deg))
 
     @F.pandas_udf("col1 double, col2 double")
     def geohashDecode(c: pd.Series) -> pd.DataFrame:

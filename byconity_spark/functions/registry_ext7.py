@@ -195,18 +195,26 @@ def _stem(lang, col) -> Column:
 # Unicode / charset
 # ---------------------------------------------------------------------------
 
+def _map_udf(one, return_type: str):
+    """An Arrow-batched UDF applying ``one`` to every non-NULL value (NULL
+    in, NULL out).  The Column API and ``sql_kernels`` share these."""
+
+    @F.pandas_udf(return_type)
+    def k(s: pd.Series) -> pd.Series:
+        return s.map(lambda v: None if v is None else one(v))
+
+    return k
+
+
+def _normalize_kernel(form: str):
+    import unicodedata
+
+    return _map_udf(lambda v: unicodedata.normalize(form, v), "string")
+
+
 def _normalize_utf8(form: str):
     def impl(col) -> Column:
-        @F.pandas_udf("string")
-        def k(s: pd.Series) -> pd.Series:
-            import unicodedata
-
-            return s.map(
-                lambda v: None if v is None
-                else unicodedata.normalize(form, v)
-            )
-
-        return k(_lit(col))
+        return _normalize_kernel(form)(_lit(col))
 
     return impl
 
@@ -214,29 +222,28 @@ def _normalize_utf8(form: str):
 _UNI_RE = re.compile(r"\\u([0-9a-fA-F]{4})")
 
 
+def _unicode_all(v: str) -> str:
+    return _UNI_RE.sub(lambda m: chr(int(m.group(1), 16)), v)
+
+
+def _unicode_leading(v: str) -> str:
+    # the non-All form only decodes the LEADING run of escapes and leaves
+    # the tail verbatim
+    out = []
+    i = 0
+    while i + 6 <= len(v):
+        m = _UNI_RE.match(v, i)
+        if not m:
+            break
+        out.append(chr(int(m.group(1), 16)))
+        i = m.end()
+    return "".join(out) + v[i:]
+
+
 def _unicode_to_utf8(col, parse_all: bool = False) -> Column:
-    # unicodeToUTF8.cpp: decode \uXXXX escapes; the non-All form only
-    # decodes the LEADING run of escapes and leaves the tail verbatim
-    @F.pandas_udf("string")
-    def k(s: pd.Series) -> pd.Series:
-        def one(v):
-            if v is None:
-                return None
-            if parse_all:
-                return _UNI_RE.sub(lambda m: chr(int(m.group(1), 16)), v)
-            out = []
-            i = 0
-            while i + 6 <= len(v):
-                m = _UNI_RE.match(v, i)
-                if not m:
-                    break
-                out.append(chr(int(m.group(1), 16)))
-                i = m.end()
-            return "".join(out) + v[i:]
-
-        return s.map(one)
-
-    return k(_lit(col))
+    # unicodeToUTF8.cpp: decode \uXXXX escapes
+    one = _unicode_all if parse_all else _unicode_leading
+    return _map_udf(one, "string")(_lit(col))
 
 
 def _convert_charset(col, frm, to) -> Column:
@@ -280,21 +287,16 @@ def _nlp_unconfigured(name: str):
     return impl
 
 
+def _charset_of(v: str) -> str:
+    try:
+        v.encode("ascii")
+        return "US-ASCII"
+    except UnicodeEncodeError:
+        return "UTF-8"
+
+
 def _detect_charset(col) -> Column:
-    @F.pandas_udf("string")
-    def k(s: pd.Series) -> pd.Series:
-        def one(v):
-            if v is None:
-                return None
-            try:
-                v.encode("ascii")
-                return "US-ASCII"
-            except UnicodeEncodeError:
-                return "UTF-8"
-
-        return s.map(one)
-
-    return k(_lit(col))
+    return _map_udf(_charset_of, "string")(_lit(col))
 
 
 _TONE_POS = frozenset(
@@ -307,25 +309,18 @@ _TONE_NEG = frozenset(
 )
 
 
-def _detect_tonality(col) -> Column:
+def _tonality_of(v: str) -> float:
     # reference returns Float32 in [-1, 1] from a trained frequency model;
     # this embedded word-list heuristic keeps the contract
-    @F.pandas_udf("double")
-    def k(s: pd.Series) -> pd.Series:
-        def one(v):
-            if v is None:
-                return None
-            toks = re.findall(r"[a-z']+", v.lower())
-            if not toks:
-                return 0.0
-            score = sum(
-                (t in _TONE_POS) - (t in _TONE_NEG) for t in toks
-            )
-            return max(-1.0, min(1.0, score / max(len(toks), 1) * 5.0))
+    toks = re.findall(r"[a-z']+", v.lower())
+    if not toks:
+        return 0.0
+    score = sum((t in _TONE_POS) - (t in _TONE_NEG) for t in toks)
+    return max(-1.0, min(1.0, score / max(len(toks), 1) * 5.0))
 
-        return s.map(one)
 
-    return k(_lit(col))
+def _detect_tonality(col) -> Column:
+    return _map_udf(_tonality_of, "double")(_lit(col))
 
 
 _PROG_SIGS = [
@@ -339,23 +334,18 @@ _PROG_SIGS = [
 ]
 
 
+def _programming_language_of(v: str) -> str:
+    low = v.lower()
+    best, hits = "undefined", 0
+    for lang, sigs in _PROG_SIGS:
+        n = sum(low.count(sig.lower()) for sig in sigs)
+        if n > hits:
+            best, hits = lang, n
+    return best
+
+
 def _detect_programming_language(col) -> Column:
-    @F.pandas_udf("string")
-    def k(s: pd.Series) -> pd.Series:
-        def one(v):
-            if v is None:
-                return None
-            low = v.lower()
-            best, hits = "undefined", 0
-            for lang, sigs in _PROG_SIGS:
-                n = sum(low.count(sig.lower()) for sig in sigs)
-                if n > hits:
-                    best, hits = lang, n
-            return best
-
-        return s.map(one)
-
-    return k(_lit(col))
+    return _map_udf(_programming_language_of, "string")(_lit(col))
 
 
 def _detect_language(col, mode: str = "one") -> Column:
@@ -441,27 +431,22 @@ _TIMEDELTA_UNITS = [
 ]
 
 
-def _parse_time_delta(col) -> Column:
+def _time_delta_of(v: str) -> float:
     # parseTimeDelta.cpp: '1 yr 2 mo', '1.5h 30m' ... -> seconds (Float64)
-    @F.pandas_udf("double")
-    def k(s: pd.Series) -> pd.Series:
-        def one(v):
-            if v is None:
-                return None
-            total, matched = 0.0, False
-            for unit_re, secs in _TIMEDELTA_UNITS:
-                for m in re.finditer(
-                    rf"(\d+(?:\.\d+)?)\s*{unit_re}\b", v, re.IGNORECASE
-                ):
-                    total += float(m.group(1)) * secs
-                    matched = True
-            if not matched:
-                raise ValueError(f"parseTimeDelta: cannot parse {v!r}")
-            return total
+    total, matched = 0.0, False
+    for unit_re, secs in _TIMEDELTA_UNITS:
+        for m in re.finditer(
+            rf"(\d+(?:\.\d+)?)\s*{unit_re}\b", v, re.IGNORECASE
+        ):
+            total += float(m.group(1)) * secs
+            matched = True
+    if not matched:
+        raise ValueError(f"parseTimeDelta: cannot parse {v!r}")
+    return total
 
-        return s.map(one)
 
-    return k(_lit(col))
+def _parse_time_delta(col) -> Column:
+    return _map_udf(_time_delta_of, "double")(_lit(col))
 
 
 def _bit_rotate_right(c, n) -> Column:
@@ -946,106 +931,16 @@ def sql_kernels() -> dict:
             raise ValueError(f"stem: unsupported language(s) {sorted(bad)}")
         return w.map(lambda v: None if v is None else _porter_stem(v))
 
-    def _norm(form):
-        @F.pandas_udf("string")
-        def k(s: pd.Series) -> pd.Series:
-            import unicodedata
-
-            return s.map(lambda v: None if v is None
-                         else unicodedata.normalize(form, v))
-
-        return k
-
-    @F.pandas_udf("double")
-    def parseTimeDelta(s: pd.Series) -> pd.Series:
-        def one(v):
-            if v is None:
-                return None
-            total, matched = 0.0, False
-            for unit_re, secs in _TIMEDELTA_UNITS:
-                for m in re.finditer(
-                    rf"(\d+(?:\.\d+)?)\s*{unit_re}\b", v, re.IGNORECASE
-                ):
-                    total += float(m.group(1)) * secs
-                    matched = True
-            if not matched:
-                raise ValueError(f"parseTimeDelta: cannot parse {v!r}")
-            return total
-
-        return s.map(one)
-
-    @F.pandas_udf("string")
-    def detectCharset(s: pd.Series) -> pd.Series:
-        def one(v):
-            if v is None:
-                return None
-            try:
-                v.encode("ascii")
-                return "US-ASCII"
-            except UnicodeEncodeError:
-                return "UTF-8"
-
-        return s.map(one)
-
-    @F.pandas_udf("double")
-    def detectTonality(s: pd.Series) -> pd.Series:
-        def one(v):
-            if v is None:
-                return None
-            toks = re.findall(r"[a-z']+", v.lower())
-            if not toks:
-                return 0.0
-            score = sum((t in _TONE_POS) - (t in _TONE_NEG) for t in toks)
-            return max(-1.0, min(1.0, score / max(len(toks), 1) * 5.0))
-
-        return s.map(one)
-
-    @F.pandas_udf("string")
-    def detectProgrammingLanguage(s: pd.Series) -> pd.Series:
-        def one(v):
-            if v is None:
-                return None
-            low = v.lower()
-            best, hits = "undefined", 0
-            for lang2, sigs in _PROG_SIGS:
-                n = sum(low.count(sig.lower()) for sig in sigs)
-                if n > hits:
-                    best, hits = lang2, n
-            return best
-
-        return s.map(one)
-
-    @F.pandas_udf("string")
-    def unicodeToUTF8(s: pd.Series) -> pd.Series:
-        def one(v):
-            if v is None:
-                return None
-            out, i = [], 0
-            while i + 6 <= len(v):
-                m = _UNI_RE.match(v, i)
-                if not m:
-                    break
-                out.append(chr(int(m.group(1), 16)))
-                i = m.end()
-            return "".join(out) + v[i:]
-
-        return s.map(one)
-
-    @F.pandas_udf("string")
-    def unicodeToUTF8All(s: pd.Series) -> pd.Series:
-        return s.map(lambda v: None if v is None else _UNI_RE.sub(
-            lambda m: chr(int(m.group(1), 16)), v))
-
     return {
         "stem": stem,
-        "normalizeUTF8NFC": _norm("NFC"),
-        "normalizeUTF8NFD": _norm("NFD"),
-        "normalizeUTF8NFKC": _norm("NFKC"),
-        "normalizeUTF8NFKD": _norm("NFKD"),
-        "parseTimeDelta": parseTimeDelta,
-        "detectCharset": detectCharset,
-        "detectTonality": detectTonality,
-        "detectProgrammingLanguage": detectProgrammingLanguage,
-        "unicodeToUTF8": unicodeToUTF8,
-        "unicodeToUTF8All": unicodeToUTF8All,
+        **{
+            f"normalizeUTF8{form}": _normalize_kernel(form)
+            for form in ("NFC", "NFD", "NFKC", "NFKD")
+        },
+        "parseTimeDelta": _map_udf(_time_delta_of, "double"),
+        "detectCharset": _map_udf(_charset_of, "string"),
+        "detectTonality": _map_udf(_tonality_of, "double"),
+        "detectProgrammingLanguage": _map_udf(_programming_language_of, "string"),
+        "unicodeToUTF8": _map_udf(_unicode_leading, "string"),
+        "unicodeToUTF8All": _map_udf(_unicode_all, "string"),
     }

@@ -44,6 +44,68 @@ def cosine_similarity(a, b) -> "F.Column":
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def _nearest_centroids(
+    df: DataFrame, cents: DataFrame, idc: str, vec: str, n_keep: int
+) -> DataFrame:
+    """(idc, vec, cid) for each row's ``n_keep`` most cosine-similar
+    centroids of ``cents`` (cid, centroid), ties to the lower cid — the IVF
+    coarse quantizer's assignment."""
+    scored = df.crossJoin(F.broadcast(cents)).select(
+        idc, vec, "cid", cosine_similarity(F.col(vec), F.col("centroid")).alias("cs")
+    )
+    w = Window.partitionBy(idc).orderBy(F.desc("cs"), F.col("cid").asc())
+    return (
+        scored.withColumn("crank", F.row_number().over(w))
+        .filter(F.col("crank") <= n_keep)
+        .select(idc, vec, "cid")
+    )
+
+
+def _sub_l2(vcol: str, s: int, d_sub: int) -> "F.Column":
+    """Squared L2 distance between subspace ``s`` of ``vcol`` and of the
+    codeword column ``cv``."""
+    a = F.slice(F.col(vcol), s * d_sub + 1, d_sub)
+    b = F.slice(F.col("cv"), s * d_sub + 1, d_sub)
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _sub_distances(
+    pairs: DataFrame, keys: list, vcol: str, n_sub: int, d_sub: int, dist: str
+) -> DataFrame:
+    """Long format (keys..., sub, dist): one row per subspace of every
+    (vector, codeword) pair."""
+    return pairs.select(
+        *keys,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(s).alias("sub"), _sub_l2(vcol, s, d_sub).alias(dist))
+                    for s in range(n_sub)
+                ]
+            )
+        ).alias("sd"),
+    ).select(*keys, F.col("sd.sub").alias("sub"), F.col(f"sd.{dist}").alias(dist))
+
+
+def _pq_codes(
+    pairs: DataFrame, idc: str, vcol: str, code: str, n_sub: int, d_sub: int
+) -> DataFrame:
+    """(idc, sub, code, d2): the nearest codeword per (vector, subspace),
+    ties to the lower code — PQ encoding of the (vector x codeword)
+    ``pairs``."""
+    long = _sub_distances(pairs, [idc, code], vcol, n_sub, d_sub, "d2")
+    w = Window.partitionBy(idc, "sub").orderBy(F.asc("d2"), F.asc(code))
+    return (
+        long.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select(idc, "sub", code, "d2")
+    )
+
+
 def ann_bruteforce_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -125,20 +187,12 @@ def ann_ivf_topk(
         F.col(group_col).alias("cid"), F.col("centroid")
     ).persist()
 
-    def assign(df: DataFrame, idc: str, vec: str, n_keep: int) -> DataFrame:
-        scored = df.crossJoin(F.broadcast(cents)).select(
-            idc, vec, "cid", cosine_similarity(F.col(vec), F.col("centroid")).alias("cs")
-        )
-        w = Window.partitionBy(idc).orderBy(F.desc("cs"), F.col("cid").asc())
-        return (
-            scored.withColumn("crank", F.row_number().over(w))
-            .filter(F.col("crank") <= n_keep)
-            .select(idc, vec, "cid")
-        )
-
-    inv_lists = assign(embeddings.select(id_col, vec_col), id_col, vec_col, 1)
-    probes = assign(
+    inv_lists = _nearest_centroids(
+        embeddings.select(id_col, vec_col), cents, id_col, vec_col, 1
+    )
+    probes = _nearest_centroids(
         queries.select(query_id_col, vec_col).withColumnRenamed(vec_col, "__qvec"),
+        cents,
         query_id_col,
         "__qvec",
         nprobe,
@@ -516,31 +570,7 @@ def pq_encode(
     )
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     pairs = emb.select(F.col(id_col), v.alias("__v")).crossJoin(F.broadcast(cents))
-
-    def sub_d2(s: int):
-        a = F.slice(F.col("__v"), s * d_sub + 1, d_sub)
-        b = F.slice(F.col("cv"), s * d_sub + 1, d_sub)
-        diff = F.zip_with(a, b, lambda x, y: (x - y) * (x - y))
-        return F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x)
-
-    long = pairs.select(
-        id_col,
-        "cl",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(s).alias("sub"), sub_d2(s).alias("d2"))
-                    for s in range(n_sub)
-                ]
-            )
-        ).alias("sd"),
-    ).select(id_col, "cl", F.col("sd.sub").alias("sub"), F.col("sd.d2").alias("d2"))
-    w = Window.partitionBy(id_col, "sub").orderBy(F.asc("d2"), F.asc("cl"))
-    best = (
-        long.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(id_col, "sub", "cl", "d2")
-    )
+    best = _pq_codes(pairs, id_col, "__v", "cl", n_sub, d_sub)
     return best.groupBy(id_col).agg(
         F.array_join(
             F.transform(
@@ -589,21 +619,12 @@ def ann_ivfpq_topk(
         F.col(group_col).alias("cid"), F.col("centroid")
     )
 
-    def assign(df: DataFrame, idc: str, vec: str, n_keep: int) -> DataFrame:
-        scored = df.crossJoin(F.broadcast(cents)).select(
-            idc, vec, "cid",
-            cosine_similarity(F.col(vec), F.col("centroid")).alias("cs"),
-        )
-        w = Window.partitionBy(idc).orderBy(F.desc("cs"), F.col("cid").asc())
-        return (
-            scored.withColumn("crank", F.row_number().over(w))
-            .filter(F.col("crank") <= n_keep)
-            .select(idc, vec, "cid")
-        )
-
-    inv_lists = assign(embeddings.select(id_col, vec_col), id_col, vec_col, 1)
-    probes = assign(
+    inv_lists = _nearest_centroids(
+        embeddings.select(id_col, vec_col), cents, id_col, vec_col, 1
+    )
+    probes = _nearest_centroids(
         queries.select(query_id_col, vec_col).withColumnRenamed(vec_col, "__qvec"),
+        cents,
         query_id_col,
         "__qvec",
         nprobe,
@@ -620,36 +641,7 @@ def ann_ivfpq_topk(
         F.broadcast(cw)
     )
 
-    def sub_l2(vcol: str, s: int):
-        a = F.slice(F.col(vcol), s * d_sub + 1, d_sub)
-        b = F.slice(F.col("cv"), s * d_sub + 1, d_sub)
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    def encode_long(df: DataFrame, idc: str, vcol: str) -> DataFrame:
-        long = df.select(
-            idc,
-            "code",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(F.lit(s).alias("sub"), sub_l2(vcol, s).alias("d2"))
-                        for s in range(n_sub)
-                    ]
-                )
-            ).alias("sd"),
-        ).select(idc, "code", F.col("sd.sub").alias("sub"), F.col("sd.d2").alias("d2"))
-        w = Window.partitionBy(idc, "sub").orderBy(F.asc("d2"), F.asc("code"))
-        return (
-            long.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select(idc, "sub", "code")
-        )
-
-    codes = encode_long(pairs, id_col, "__v")
+    codes = _pq_codes(pairs, id_col, "__v", "code", n_sub, d_sub).drop("d2")
 
     # ADC tables: per (query, sub, codeword) squared distance — tiny.
     qv = F.transform(F.col("__qvec"), lambda x: x.cast("double"))
@@ -658,18 +650,7 @@ def ann_ivfpq_topk(
         .select(query_id_col, qv.alias("__q"))
         .crossJoin(F.broadcast(cw))
     )
-    adc = q_pairs.select(
-        query_id_col,
-        "code",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(s).alias("sub"), sub_l2("__q", s).alias("qd2"))
-                    for s in range(n_sub)
-                ]
-            )
-        ).alias("sd"),
-    ).select(query_id_col, "code", F.col("sd.sub").alias("sub"), F.col("sd.qd2").alias("qd2"))
+    adc = _sub_distances(q_pairs, [query_id_col, "code"], "__q", n_sub, d_sub, "qd2")
 
     cands = probes.join(inv_lists.select(id_col, "cid"), on="cid").select(
         query_id_col, "__qvec", id_col
@@ -750,13 +731,6 @@ def semdedup_keep_list(
         emb, "e", k=k, iters=iters, id_col=id_col,
         round_decimals=round_decimals,
     )
-    def _dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda p, q: p * q),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
     # persist: the assignment feeds BOTH self-join sides and the output
     # join — each reuse would otherwise replay the whole k-means lineage.
     # Norms precompute per VECTOR here (O(n·d)), not per pair (O(pairs·d)).

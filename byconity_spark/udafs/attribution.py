@@ -17,8 +17,8 @@ reference:
   fused result directly from the partial frame, so no separate entry
   point is needed — Spark's aggregate already IS the two-stage merge.
 
-Spark-first shape: ONE Arrow-batched ``applyInPandas`` pass per user
-produces per-(user, touch) partial rows (the equivalent of the reference's
+Spark-first shape: ONE pass of the grouped-kernel scaffold
+(``udafs/kernel.py``) per user produces per-(user, touch) partial rows (the equivalent of the reference's
 per-place state); everything downstream — integration, ratios,
 distributions, Spearman — is plain DataFrame algebra (map-side combinable
 aggregates + bounded 10-slot frames), so the plan scales with the number
@@ -60,15 +60,16 @@ from __future__ import annotations
 from typing import Optional, Sequence
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from byconity_spark.udafs.kernel import per_key
+
 _DAY_MS = 86_400_000
 
 _PARTIAL_SCHEMA = (
-    "user_id long, touch_event string, touch_attr string, "
+    "touch_event string, touch_attr string, "
     "click_cnt long, valid_cnt long, value double, "
     "times array<long>, steps array<long>"
 )
@@ -119,52 +120,7 @@ def attribution_analysis_partials(
     n_procs = len(procs)
     touch_set = set(touch_list) - proc_set - {target_event}
 
-    # Bucket users so ONE kernel invocation processes many users — the
-    # per-group Arrow/pandas overhead of user-sized groups dominates
-    # otherwise (15k tiny groups vs a handful of bucket groups).  Bucket
-    # and partition counts are input-size-adaptive, same policy as the
-    # funnel kernels; the explicit repartition pins the kernel stage's
-    # parallelism (AQE's byte-based coalescing would serialize it).
-    from byconity_spark.udafs.behavioral import _kernel_layout
-
-    n_buckets, n_parts = _kernel_layout(sel)
-    sel = sel.withColumn(
-        "__b", F.pmod(F.xxhash64("user_id"), F.lit(n_buckets))
-    ).repartition(n_parts, "__b")
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(
-            ["user_id", "ts_us", "name", "eid"], kind="mergesort"
-        )
-        all_uids = pdf["user_id"].to_numpy(dtype=np.int64)
-        all_ts = pdf["ts_us"].to_numpy(dtype=np.int64)
-        all_names = pdf["name"].to_numpy()
-        all_attrs = pdf["attr"].to_numpy()
-        all_vals = pdf["value"].to_numpy(dtype=np.float64)
-        bounds = np.flatnonzero(np.diff(all_uids) != 0) + 1
-        out_rows: list[tuple] = []
-        for lo, hi in zip(
-            np.concatenate(([0], bounds)),
-            np.concatenate((bounds, [len(all_uids)])),
-        ):
-            out_rows.extend(
-                _user_partials(
-                    int(all_uids[lo]),
-                    all_ts[lo:hi],
-                    all_names[lo:hi],
-                    all_attrs[lo:hi],
-                    all_vals[lo:hi],
-                )
-            )
-        return pd.DataFrame(
-            out_rows,
-            columns=[
-                "user_id", "touch_event", "touch_attr",
-                "click_cnt", "valid_cnt", "value", "times", "steps",
-            ],
-        )
-
-    def _user_partials(uid, ts, names, attrs, vals) -> list[tuple]:
+    def _user_partials(ts, names, attrs, vals) -> list[tuple]:
         res: dict[tuple, list] = {}
 
         def ent(key: tuple) -> list:
@@ -256,11 +212,15 @@ def attribution_analysis_partials(
                 e[2] += tv * c if tv > 0 else c
 
         return [
-            (uid, k[0], k[1], e[0], e[1], e[2], e[3], e[4])
+            (k[0], k[1], e[0], e[1], e[2], e[3], e[4])
             for k, e in res.items()
         ]
 
-    return sel.groupBy("__b").applyInPandas(kernel, _PARTIAL_SCHEMA)
+    # one kernel call per user bucket, events in (ts, name, eid) order
+    return per_key(
+        sel, ["user_id"], ["ts_us", "name", "attr", "value"], _user_partials,
+        _PARTIAL_SCHEMA, order=["ts_us", "name", "eid"],
+    )
 
 
 def attribution_analysis(events: DataFrame, **kwargs) -> DataFrame:

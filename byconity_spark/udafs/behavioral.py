@@ -6,16 +6,13 @@ Reference kernels (C++):
   * sequenceMatch — src/AggregateFunctions/AggregateFunctionSequenceMatch.cpp
   * sessionSplit  — src/AggregateFunctions/AggregateFunctionSessionSplit.cpp
 
-Spark-first design: the kernels run as Arrow-batched ``applyInPandas``
-group transforms over HASH BUCKETS of users (bucket and partition counts
-adaptive to input size — see ``_kernel_layout``; the kernel stage is
-explicitly repartitioned so AQE's byte-based coalescing cannot serialize
-CPU-heavy kernels), not one group per user — per-group scheduling
-overhead amortizes across many users per call while the inside stays
-vectorized (each bucket kernel processes all its users with
-numpy/pandas C paths).  ``retention`` needs no
-kernel at all (it is a conjunction of boolean aggregates, expressed as
-JVM-side ``max(when(...))``).
+Spark-first design: the Python kernels run on the grouped-kernel scaffold
+(``udafs/kernel.py``): Arrow-batched group transforms over HASH BUCKETS of
+users, with bucket and partition counts adaptive to input size — not one
+group per user, so per-group scheduling overhead amortizes across many
+users per call.  Each kernel here keeps only its per-user math over numpy
+arrays.  ``retention`` needs no kernel at all (it is a conjunction of
+boolean aggregates, expressed as JVM-side ``max(when(...))``).
 
 Semantics notes:
   * ``window_funnel`` implements the deterministic FIRST-ANCHOR variant:
@@ -45,13 +42,18 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from byconity_spark.udafs.kernel import per_bucket, per_key
+
 _MICRO = 1_000_000
 
 
-def _us(series: pd.Series) -> np.ndarray:
-    """Timestamp series -> int64 microseconds, regardless of the pandas
-    datetime unit Arrow happened to deliver (ns vs us)."""
-    return series.to_numpy().astype("datetime64[us]").astype(np.int64)
+def _user_key(user_col: str) -> Column:
+    """The per-user kernels' key: declared ``long`` whatever the input width."""
+    return F.col(user_col).cast("long").alias(user_col)
+
+
+def _micros(ts_col: str) -> Column:
+    return F.unix_micros(F.col(ts_col))
 
 
 def funnel_level_from_arrays(per_step: list[np.ndarray], window_us: int) -> int:
@@ -204,7 +206,6 @@ def window_funnel_modes(
     ts_col: str = "ts",
     type_col: str = "event_type",
     id_col: str = "event_id",
-    n_buckets: int | None = None,
 ) -> DataFrame:
     """windowFunnel with CH strictness flags — per-user (user_id,
     funnel_level) via a sequential walk over the (ts, event_id)-sorted
@@ -218,37 +219,13 @@ def window_funnel_modes(
     steps = list(steps)
     core = funnel_level_sliding_core if sliding else funnel_level_modes_core
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([user_col, ts_col, id_col], kind="stable")
-        frame = pd.DataFrame(
-            {
-                "u": pdf[user_col].to_numpy(),
-                "ts": _us(pdf[ts_col]),
-                "tp": pdf[type_col].to_numpy(),
-            }
-        )
-        users, levels = [], []
-        for u, g in frame.groupby("u", sort=False):
-            users.append(u)
-            levels.append(
-                core(
-                    g["tp"].to_numpy(),
-                    g["ts"].to_numpy(),
-                    steps,
-                    window_us,
-                    strict_order=strict_order,
-                    strict_dedup=strict_dedup,
-                    strict_increase=strict_increase,
-                )
-            )
-        return pd.DataFrame(
-            {user_col: users, "funnel_level": np.asarray(levels, dtype=np.int32)}
-        )
+    def level(ts: np.ndarray, tp: np.ndarray) -> list:
+        return [(core(tp, ts, steps, window_us, strict_order=strict_order,
+                      strict_dedup=strict_dedup, strict_increase=strict_increase),)]
 
-    return (
-        _bucketed(events, user_col, [ts_col, type_col, id_col], n_buckets)
-        .groupBy("__b")
-        .applyInPandas(kernel, schema=f"{user_col} long, funnel_level int")
+    return per_key(
+        events, [_user_key(user_col)], [_micros(ts_col), type_col], level,
+        "funnel_level int", order=[ts_col, id_col],
     )
 
 
@@ -290,76 +267,6 @@ def subsequence_matched_gaps(
     return len(feas) > 0
 
 
-_BUCKET_TARGET_BYTES = 8 << 20  # ~8 MB of plan-estimated input per kernel bucket
-_BUCKETS_PER_TASK = 4  # >=4 distinct bucket values per partition (guide §2.5)
-_MIN_KERNEL_TASKS = 8  # parallelism floor for tiny inputs (A/B matrix, see below)
-_UNKNOWN_SIZE_SENTINEL = 1 << 50  # >=1 PiB estimate == "optimizer has no idea"
-
-
-def _kernel_layout(df: DataFrame, n_buckets: int | None = None) -> tuple[int, int]:
-    """(bucket count, partition count) for the hash-bucketed applyInPandas
-    scaffold, both scale-adaptive.
-
-    Partition count P: AQE's byte-based partition coalescing collapses
-    these tiny (<few MB at bench scale) kernel shuffles to ONE task, so a
-    CPU-heavy Python kernel runs every bucket serially (measured: the
-    xirr kernel's 1.5 s of per-bucket CPU showed up 1:1 in wall time; an
-    explicit repartition cut the query 2.9 -> 0.9 s warm).  Bytes are the
-    wrong coalescing currency for Python kernels — 2 MB of cashflows is
-    1.5 s of root-finding.  An explicit ``repartition(P, __b)`` pins the
-    stage's parallelism: AQE never changes a user-specified partition
-    count, and ``groupBy(__b)`` reuses the partitioning (no second
-    exchange).  P = max(8, estimated-input / 32 MB), capped at 2**18
-    tasks: size-proportional, with a floor of 8 tasks so a CPU-heavy
-    kernel over a small input still spreads.  The floor is a measured
-    optimum, not a core-count constant: an interleaved warm A/B matrix
-    over all eight kernel entry points at sf0.1 (serial / P=8 / P=16 /
-    P=32, `.dev/ab_parallel2.py`) gave totals 6.65 / 4.68 / 4.92 /
-    5.35 s — P=8 already captures the heavy kernels' win (xirr 1.98 ->
-    0.66 s) while each extra 4x of tasks costs light kernels ~0.05 s of
-    scheduling overhead at this scale; past ~256 MB of input the size
-    term takes over regardless of the floor.
-
-    Bucket count B = 4·P distinct values, so the bucket hash spreads over
-    the P partitions without collision gaps (guide §2.5: use several
-    distinct key values per partition), each bucket targeting ~8 MB of
-    input so per-task kernel state stays bounded at any scale.
-    """
-    try:
-        par = int(df.sparkSession.sparkContext.defaultParallelism)
-    except Exception:
-        par = 32
-    if n_buckets is not None:
-        return n_buckets, max(1, min(par, n_buckets // _BUCKETS_PER_TASK or 1))
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        size = -1
-    if size < 0 or size >= _UNKNOWN_SIZE_SENTINEL:
-        # the optimizer reports ~Long.MaxValue when it cannot estimate a
-        # subtree (spark.sql.defaultSizeInBytes) — never turn that into a
-        # partition count, fall back to one task per core
-        return _BUCKETS_PER_TASK * par, par
-    ptasks = int(
-        max(
-            _MIN_KERNEL_TASKS,
-            min(1 << 18, size // (_BUCKETS_PER_TASK * _BUCKET_TARGET_BYTES)),
-        )
-    )
-    return _BUCKETS_PER_TASK * ptasks, ptasks
-
-
-def _bucketed(
-    events: DataFrame, user_col: str, cols: list[str], n_buckets: int | None
-) -> DataFrame:
-    nb, nparts = _kernel_layout(events, n_buckets)
-    return (
-        events.select(user_col, *cols)
-        .withColumn("__b", F.pmod(F.hash(F.col(user_col)), F.lit(nb)))
-        .repartition(nparts, "__b")
-    )
-
-
 def window_funnel(
     events: DataFrame,
     window_us: int,
@@ -367,7 +274,6 @@ def window_funnel(
     user_col: str = "user_id",
     ts_col: str = "ts",
     type_col: str = "event_type",
-    n_buckets: int | None = None,
 ) -> DataFrame:
     """Per-user funnel depth: (user_id, funnel_level) with level in [0, len(steps)].
 
@@ -376,24 +282,13 @@ def window_funnel(
     """
     steps = list(steps)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        frame = pd.DataFrame(
-            {"u": pdf[user_col].to_numpy(), "ts": _us(pdf[ts_col]), "tp": pdf[type_col].to_numpy()}
-        )
-        users, levels = [], []
-        for u, g in frame.groupby("u", sort=False):
-            gts, gtp = g["ts"].to_numpy(), g["tp"].to_numpy()
-            per_step = [np.sort(gts[gtp == s]) for s in steps]
-            users.append(u)
-            levels.append(funnel_level_from_arrays(per_step, window_us))
-        return pd.DataFrame(
-            {user_col: users, "funnel_level": np.asarray(levels, dtype=np.int32)}
-        )
+    def level(ts: np.ndarray, tp: np.ndarray) -> list:
+        per_step = [np.sort(ts[tp == s]) for s in steps]
+        return [(funnel_level_from_arrays(per_step, window_us),)]
 
-    return (
-        _bucketed(events, user_col, [ts_col, type_col], n_buckets)
-        .groupBy("__b")
-        .applyInPandas(kernel, schema=f"{user_col} long, funnel_level int")
+    return per_key(
+        events, [_user_key(user_col)], [_micros(ts_col), type_col], level,
+        "funnel_level int",
     )
 
 
@@ -429,37 +324,18 @@ def sequence_match(
     time-ordered subsequence.  With ``max_gaps_us`` (length k-1) the
     pattern carries per-step time bounds — CH ``(?t<=N)`` — solved with
     the feasible-frontier core (greedy is not exact under gap bounds)."""
-    nb, nparts = _kernel_layout(events)
-    tagged = (
-        events.select(
-            user_col,
-            ts_col,
-            *[c.cast("boolean").alias(f"__m{i}") for i, c in enumerate(conds)],
-        )
-        .withColumn("__b", F.pmod(F.hash(F.col(user_col)), F.lit(nb)))
-        .repartition(nparts, "__b")
-    )
-    k = len(conds)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        ts = _us(pdf[ts_col])
-        masks = [pdf[f"__m{i}"].fillna(False).to_numpy().astype(bool) for i in range(k)]
-        frame = pd.DataFrame({"u": pdf[user_col].to_numpy(), "ts": ts})
-        users, flags = [], []
-        for u, g in frame.groupby("u", sort=False):
-            idx = g.index.to_numpy()
-            gts = ts[idx]
-            order = np.argsort(gts, kind="stable")
-            per_cond = [np.asarray(gts[order][masks[i][idx][order]]) for i in range(k)]
-            users.append(u)
-            if max_gaps_us is None:
-                flags.append(bool(subsequence_matched(per_cond)))
-            else:
-                flags.append(bool(subsequence_matched_gaps(per_cond, list(max_gaps_us))))
-        return pd.DataFrame({user_col: users, "matched": flags})
+    def matched(ts: np.ndarray, *masks: np.ndarray) -> list:
+        # a NULL condition is not a match (object None -> False)
+        per_cond = [ts[m.astype(bool)] for m in masks]
+        if max_gaps_us is None:
+            return [(bool(subsequence_matched(per_cond)),)]
+        return [(bool(subsequence_matched_gaps(per_cond, list(max_gaps_us))),)]
 
-    return tagged.groupBy("__b").applyInPandas(
-        kernel, schema=f"{user_col} long, matched boolean"
+    return per_key(
+        events, [_user_key(user_col)],
+        [_micros(ts_col), *[c.cast("boolean") for c in conds]], matched,
+        "matched boolean", order=[ts_col],
     )
 
 
@@ -491,25 +367,12 @@ def sequence_count(
     NON-OVERLAPPING ordered chains of the pattern occur."""
     pattern = list(pattern)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        ts = _us(pdf[ts_col])
-        ids = pdf[id_col].to_numpy()
-        frame = pd.DataFrame(
-            {"u": pdf[user_col].to_numpy(), "ts": ts, "id": ids, "tp": pdf[type_col].to_numpy()}
-        )
-        users, counts = [], []
-        for u, g in frame.groupby("u", sort=False):
-            g = g.sort_values(["ts", "id"], kind="stable")
-            users.append(u)
-            counts.append(sequence_count_core(g["tp"].to_numpy(), pattern))
-        return pd.DataFrame(
-            {user_col: users, "n_matches": np.asarray(counts, dtype=np.int64)}
-        )
+    def count(tp: np.ndarray) -> list:
+        return [(sequence_count_core(tp, pattern),)]
 
-    return (
-        _bucketed(events, user_col, [ts_col, type_col, id_col], None)
-        .groupBy("__b")
-        .applyInPandas(kernel, schema=f"{user_col} long, n_matches long")
+    return per_key(
+        events, [_user_key(user_col)], [type_col], count, "n_matches long",
+        order=[ts_col, id_col],
     )
 
 
@@ -634,46 +497,34 @@ def session_split(
     """Split each user's event stream into sessions at silence gaps >
     ``gap_us``; one output row per session (vectorized diff+cumsum kernel)."""
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([user_col, ts_col, id_col], kind="stable")
-        us = _us(pdf[ts_col])
-        uid = pdf[user_col].to_numpy()
-        n = len(pdf)
-        new_user = np.ones(n, dtype=bool)
-        gap_brk = np.zeros(n, dtype=np.int64)
-        if n > 1:
-            new_user[1:] = uid[1:] != uid[:-1]
-            gap_brk[1:] = (np.diff(us) > gap_us).astype(np.int64)
+    def sessions(bounds: np.ndarray, ts, us, value) -> tuple:
+        n = len(us)
+        new_user = np.zeros(n, dtype=bool)
+        new_user[bounds[:-1]] = True
         # sessions are CONTIGUOUS runs in (user, ts) order — one reduceat
-        # pass instead of a 95k-group pandas groupby-agg (4.8s -> <1s)
-        start_flag = new_user | (gap_brk == 1) & ~new_user
+        # pass over the whole bucket instead of a 95k-group pandas
+        # groupby-agg (4.8s -> <1s)
+        start_flag = new_user.copy()
+        start_flag[1:] |= np.diff(us) > gap_us
         starts = np.flatnonzero(start_flag)
         counts = np.diff(np.append(starts, n))
         idx = np.arange(len(starts))
         user_first = new_user[starts]
         base = np.maximum.accumulate(np.where(user_first, idx, -1))
-        sid = (idx - base + 1).astype("int32")
-        ts_vals = pdf[ts_col].to_numpy()
-        values = pdf[value_col].to_numpy(dtype=np.float64)
-        return pd.DataFrame(
-            {
-                user_col: uid[starts],
-                "session_id": sid,
-                "session_start": ts_vals[starts],
-                "session_end": ts_vals[starts + counts - 1],
-                "n_events": counts.astype(np.int64),
-                "sum_value": np.add.reduceat(values, starts),
-            }
-        )
+        return np.cumsum(user_first) - 1, [
+            (idx - base + 1).astype("int32"),
+            ts[starts],
+            ts[starts + counts - 1],
+            counts.astype(np.int64),
+            np.add.reduceat(np.asarray(value, dtype=np.float64), starts),
+        ]
 
-    schema = (
-        f"{user_col} long, session_id int, session_start timestamp, "
-        "session_end timestamp, n_events long, sum_value double"
-    )
-    return (
-        _bucketed(events, user_col, [ts_col, id_col, value_col], None)
-        .groupBy("__b")
-        .applyInPandas(kernel, schema=schema)
+    return per_bucket(
+        events, [_user_key(user_col)], [ts_col, _micros(ts_col), value_col],
+        sessions,
+        "session_id int, session_start timestamp, session_end timestamp, "
+        "n_events long, sum_value double",
+        order=[ts_col, id_col],
     )
 
 
@@ -859,23 +710,16 @@ def xirr(
     ts_col: str = "ts",
 ) -> DataFrame:
     """Per-group xirr over (amount, date) cashflows via an Arrow-batched
-    kernel (groups hash-bucketed like the funnel kernels)."""
+    kernel (groups hash-bucketed like the funnel kernels; flows stay in
+    arrival order, which the float sums depend on)."""
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        days = (_us(pdf[ts_col]) // 86_400_000_000).astype(np.float64)
-        amounts = pdf[amount_col].to_numpy(dtype=np.float64)
-        gids = pdf[group_col].to_numpy()
-        out_g, out_r = [], []
-        frame = pd.DataFrame({"g": gids, "a": amounts, "d": days})
-        for g, grp in frame.groupby("g", sort=False):
-            out_g.append(g)
-            out_r.append(xirr_core(grp["a"].to_numpy(), grp["d"].to_numpy()))
-        return pd.DataFrame({group_col: out_g, "rate": out_r})
+    def rate(us: np.ndarray, amount: np.ndarray) -> list:
+        days = (us // 86_400_000_000).astype(np.float64)
+        return [(xirr_core(np.asarray(amount, dtype=np.float64), days),)]
 
-    return (
-        _bucketed(cashflows, group_col, [ts_col, amount_col], None)
-        .groupBy("__b")
-        .applyInPandas(kernel, schema=f"{group_col} long, rate double")
+    return per_key(
+        cashflows, [_user_key(group_col)], [_micros(ts_col), amount_col], rate,
+        "rate double",
     )
 
 
@@ -1228,7 +1072,6 @@ def finder_funnel_by_times(
     ts_col: str = "ts",
     type_col: str = "event_type",
     id_col: str = "event_id",
-    n_buckets: int | None = None,
 ) -> DataFrame:
     """finderFunnelByTimes (reference
     AggregateFunctionFinderFunnelByTimes.h calculateFunnel — fixed-window
@@ -1251,79 +1094,46 @@ def finder_funnel_by_times(
     Output: (user, slot, reach1..reachK) — reach_k = chains in that slot
     reaching at least level k; the reference's per-slot output sections
     (its leading total section is just the sum over slots).  Bucketed
-    applyInPandas, O(events-per-user)."""
+    grouped kernel, O(events-per-user)."""
     steps = list(steps)
     k = len(steps)
-    reach_cols = [f"reach{i}" for i in range(1, k + 1)]
-    schema = (
-        f"{user_col} long, slot long, "
-        + ", ".join(f"{c} long" for c in reach_cols)
-    )
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([user_col, ts_col, id_col], kind="stable")
-        u_arr = pdf[user_col].to_numpy()
-        t_arr = _us(pdf[ts_col])
-        tp_arr = pdf[type_col].to_numpy()
-        n = len(pdf)
-        out_u: list = []
-        out_slot: list = []
-        out_counts: list = []
-        splits = np.flatnonzero(u_arr[1:] != u_arr[:-1]) + 1
-        for seg in np.split(np.arange(n), splits) if n else []:
-            u = u_arr[seg[0]]
-            t = t_arr[seg]
-            tp = tp_arr[seg]
-            step_times = []
-            step_used = []
-            for s_name in steps:
-                m = tp == s_name
-                step_times.append(t[m])
-                step_used.append(np.zeros(int(m.sum()), dtype=bool))
-            counts: dict = {}
-            for ta in step_times[0]:
-                slot = (ta - watch_start_us) // watch_step_us
-                if slot < 0 or slot >= watch_numbers:
-                    continue
-                level = 1
-                prev = ta
-                deadline = ta + window_us
-                for si in range(1, k):
-                    arr = step_times[si]
-                    used = step_used[si]
-                    j = int(np.searchsorted(arr, prev, side="right"))
-                    while j < len(arr) and used[j]:
-                        j += 1
-                    if j < len(arr) and arr[j] <= deadline:
-                        used[j] = True
-                        prev = arr[j]
-                        level += 1
-                    else:
-                        break
-                c = counts.setdefault(int(slot), np.zeros(k, dtype=np.int64))
-                c[:level] += 1
-            for slot, c in counts.items():
-                out_u.append(u)
-                out_slot.append(slot)
-                out_counts.append(c)
-        data = {
-            user_col: np.asarray(out_u, dtype=np.int64),
-            "slot": np.asarray(out_slot, dtype=np.int64),
-        }
-        stacked = (
-            np.stack(out_counts)
-            if out_counts
-            else np.zeros((0, k), dtype=np.int64)
-        )
-        for i, c in enumerate(reach_cols):
-            data[c] = stacked[:, i]
-        return pd.DataFrame(data)
+    def reach(t: np.ndarray, tp: np.ndarray) -> list:
+        step_times = []
+        step_used = []
+        for s_name in steps:
+            m = tp == s_name
+            step_times.append(t[m])
+            step_used.append(np.zeros(int(m.sum()), dtype=bool))
+        counts: dict = {}
+        for ta in step_times[0]:
+            slot = (ta - watch_start_us) // watch_step_us
+            if slot < 0 or slot >= watch_numbers:
+                continue
+            level = 1
+            prev = ta
+            deadline = ta + window_us
+            for si in range(1, k):
+                arr = step_times[si]
+                used = step_used[si]
+                j = int(np.searchsorted(arr, prev, side="right"))
+                while j < len(arr) and used[j]:
+                    j += 1
+                if j < len(arr) and arr[j] <= deadline:
+                    used[j] = True
+                    prev = arr[j]
+                    level += 1
+                else:
+                    break
+            c = counts.setdefault(int(slot), np.zeros(k, dtype=np.int64))
+            c[:level] += 1
+        return [(slot, *c) for slot, c in counts.items()]
 
     filtered = events.filter(F.unix_micros(F.col(ts_col)) >= watch_start_us)
-    return (
-        _bucketed(filtered, user_col, [ts_col, type_col, id_col], n_buckets)
-        .groupBy("__b")
-        .applyInPandas(kernel, schema=schema)
+    return per_key(
+        filtered, [_user_key(user_col)], [_micros(ts_col), type_col], reach,
+        ", ".join(["slot long"] + [f"reach{i} long" for i in range(1, k + 1)]),
+        order=[ts_col, id_col],
     )
 
 
@@ -1858,18 +1668,13 @@ def reg_auc(
     path is the contract here; the state is a single collected pair array
     in the reference too, max 4096 per block)."""
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+    def rate(p: np.ndarray, l: np.ndarray) -> list:
         v = reg_auc_core(
-            pdf["p"].to_numpy(np.float64), pdf["l"].to_numpy(np.float64)
+            np.asarray(p, dtype=np.float64), np.asarray(l, dtype=np.float64)
         )
-        return pd.DataFrame({"reg_auc": [round(v, 6)]})
+        return [(round(v, 6),)]
 
-    return (
-        events.select(score_col.alias("p"), label_col.alias("l"))
-        .withColumn("__g", F.lit(1))
-        .groupBy("__g")
-        .applyInPandas(kernel, schema="reg_auc double")
-    )
+    return per_key(events, [], [score_col, label_col], rate, "reg_auc double")
 
 
 def ecpm_auc(

@@ -18,8 +18,9 @@ and uses numpy merge ops (vectorized; a python-level containerwise walk
 would be slower than one frombuffer + np.union1d).
 
 Scale: bitmap state is bounded by the per-group member count; build is one
-shuffle on the group keys with partial pre-aggregation impossible for raw
-ids — so for 100 TB builds, pre-bucket ids (e.g. by id range) and OR the
+shuffle on the group keys (the grouped-kernel scaffold, ``udafs/kernel.py``,
+runs every grouped bitmap aggregate here) with partial pre-aggregation
+impossible for raw ids — so for 100 TB builds, pre-bucket ids (e.g. by id range) and OR the
 bucket bitmaps, exactly the reference's BitMap64 sharding guidance
 (SURVEY §7 hard parts)."""
 
@@ -30,6 +31,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from byconity_spark.udafs.kernel import per_key
 
 
 # Roaring layout (BitMap64 analogue, DataTypeBitMap64.h:25):
@@ -109,20 +112,10 @@ def group_bitmap(
     """groupBitmapState: per group, the bitmap of distinct values
     (reference AggregateFunctionGroupBitmap.h)."""
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = {c: [pdf[c].iloc[0]] for c in group_cols}
-        vals = np.unique(pdf[value_col].dropna().to_numpy(dtype=np.int64))
-        keys["bm"] = [_encode(vals)]
-        return pd.DataFrame(keys)
+    def build(v: np.ndarray) -> list:
+        return [(_encode(np.unique(v[~pd.isna(v)].astype(np.int64))),)]
 
-    key_schema = ", ".join(
-        f"{c} {df.schema[c].dataType.simpleString()}" for c in group_cols
-    )
-    return (
-        df.select(*group_cols, value_col)
-        .groupBy(*group_cols)
-        .applyInPandas(kernel, schema=f"{key_schema}, bm binary")
-    )
+    return per_key(df, group_cols, [value_col], build, "bm binary")
 
 
 def _binary_op(op: str):
@@ -205,23 +198,10 @@ def group_bitmap_merge(
     coarser grouping from states instead of raw rows.  The merge shuffles
     only the compressed states (roaring bytes), never the member ids."""
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = {c: [pdf[c].iloc[0]] for c in group_cols}
-        arrs = [_decode(b) for b in pdf[state_col]]
-        merged = (
-            np.unique(np.concatenate(arrs)) if arrs else np.empty(0, dtype="<i8")
-        )
-        keys[state_col] = [_encode(merged)]
-        return pd.DataFrame(keys)
+    def merge(states: np.ndarray) -> list:
+        return [(_encode(np.unique(np.concatenate([_decode(b) for b in states]))),)]
 
-    key_schema = ", ".join(
-        f"{c} {df.schema[c].dataType.simpleString()}" for c in group_cols
-    )
-    return (
-        df.select(*group_cols, state_col)
-        .groupBy(*group_cols)
-        .applyInPandas(kernel, schema=f"{key_schema}, {state_col} binary")
-    )
+    return per_key(df, group_cols, [state_col], merge, f"{state_col} binary")
 
 
 # ---------------------------------------------------------------------------
@@ -292,13 +272,11 @@ def bitmap_expression(
     BUILD of the states stays fully distributed via group_bitmap."""
     postfix = _parse_bitmap_expr(expr)
     tags = sorted({t[1] for t in postfix if isinstance(t, tuple)})
-    needed = states.filter(F.col(tag_col).isin(tags)).select(
-        F.col(tag_col).alias("t"), F.col(bm_col).alias("b")
-    )
+    needed = states.filter(F.col(tag_col).isin(tags))
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+    def evaluate(tag_vals: np.ndarray, bms: np.ndarray) -> list:
         by_tag: dict[str, np.ndarray] = {}
-        for t, b in zip(pdf["t"], pdf["b"]):
+        for t, b in zip(tag_vals, bms):
             arr = _decode(b)
             by_tag[t] = (
                 np.union1d(by_tag[t], arr) if t in by_tag else arr
@@ -320,12 +298,10 @@ def bitmap_expression(
         if len(stack) != 1:
             raise BitmapExprError("malformed bitmap expression")
         res = stack[0]
-        return pd.DataFrame({"bm": [_encode(res)], "cardinality": [len(res)]})
+        return [(_encode(res), len(res))]
 
-    return (
-        needed.withColumn("__g", F.lit(1))
-        .groupBy("__g")
-        .applyInPandas(kernel, schema="bm binary, cardinality long")
+    return per_key(
+        needed, [], [tag_col, bm_col], evaluate, "bm binary, cardinality long"
     )
 
 
@@ -342,29 +318,21 @@ def bitmap_max_level(
     The sweep runs in one task over #levels compressed blobs (levels are
     bounded); the state build stays distributed via group_bitmap."""
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+    def sweep(level_vals: np.ndarray, bms: np.ndarray) -> list:
         by_level: dict[int, np.ndarray] = {}
-        for lv, b in zip(pdf[level_col], pdf[bm_col]):
+        for lv, b in zip(level_vals, bms):
             arr = _decode(b)
             lv = int(lv)
             by_level[lv] = np.union1d(by_level[lv], arr) if lv in by_level else arr
-        keys = sorted(by_level, reverse=True)
         seen = np.empty(0, dtype="<i8")
-        out_levels, out_cards = [], []
-        for lv in keys:  # highest level wins its members
+        for lv in sorted(by_level, reverse=True):  # highest level wins its members
             uniq = np.setdiff1d(by_level[lv], seen)
             by_level[lv] = uniq
             seen = np.union1d(seen, uniq)
-        for lv in sorted(by_level):
-            out_levels.append(lv)
-            out_cards.append(len(by_level[lv]))
-        return pd.DataFrame({"level": out_levels, "cardinality": out_cards})
+        return [(lv, len(by_level[lv])) for lv in sorted(by_level)]
 
-    return (
-        states.select(F.col(level_col), F.col(bm_col))
-        .withColumn("__g", F.lit(1))
-        .groupBy("__g")
-        .applyInPandas(kernel, schema="level long, cardinality long")
+    return per_key(
+        states, [], [level_col, bm_col], sweep, "level long, cardinality long"
     )
 
 
@@ -594,7 +562,7 @@ def empty_bitmap() -> Column:
 # AggregateFunctionBitmapLogic.h/.cpp: bitMapColumnOr/And/Xor fold a
 # BitMap64 COLUMN with the op; bitMapColumnCardinality = cardinality of the
 # OR-fold; bitMapColumnHas = whether ANY bitmap in the group contains the
-# key).  Same grouped applyInPandas shape as group_bitmap_merge — only the
+# key).  Same grouped-kernel shape as group_bitmap_merge — only the
 # compressed states shuffle.
 # ---------------------------------------------------------------------------
 
@@ -610,21 +578,10 @@ def bitmap_column_fold(
     }
     reduce_fn = reducers[op]
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = {c: [pdf[c].iloc[0]] for c in group_cols}
-        arrs = [_decode(b) for b in pdf[state_col]]
-        merged = reduce_fn(arrs) if arrs else np.empty(0, dtype="<i8")
-        keys[state_col] = [_encode(np.asarray(merged))]
-        return pd.DataFrame(keys)
+    def fold(states: np.ndarray) -> list:
+        return [(_encode(np.asarray(reduce_fn([_decode(b) for b in states]))),)]
 
-    key_schema = ", ".join(
-        f"{c} {df.schema[c].dataType.simpleString()}" for c in group_cols
-    )
-    return (
-        df.select(*group_cols, state_col)
-        .groupBy(*group_cols)
-        .applyInPandas(kernel, schema=f"{key_schema}, {state_col} binary")
-    )
+    return per_key(df, group_cols, [state_col], fold, f"{state_col} binary")
 
 
 def bitmap_column_cardinality(

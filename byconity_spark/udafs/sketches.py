@@ -17,8 +17,10 @@ module mirrors `udafs/bitmaps.py`'s pattern with an approximate sketch:
 
 Scale shape: states are fixed 16 KiB blobs; a rollup re-aggregation shuffles
 #groups × 16 KiB regardless of the raw cardinality — the
-AggregatingMergeTree pattern.  All register math is vectorized numpy over
-Arrow batches; the value hashing stays in whole-stage codegen (xxhash64).
+AggregatingMergeTree pattern.  Every grouped sketch here runs on the
+grouped-kernel scaffold (``udafs/kernel.py``); all register math is
+vectorized numpy over Arrow batches, and the value hashing stays in
+whole-stage codegen (xxhash64).
 """
 
 from __future__ import annotations
@@ -28,6 +30,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from byconity_spark.udafs.kernel import per_key
 
 HLL_P = 14  # 2^14 registers = 16 KiB per state, ~0.81% standard error
 HLL_M = 1 << HLL_P
@@ -70,31 +74,31 @@ def _estimate(regs: np.ndarray) -> int:
     return int(round(est))
 
 
-def _hash_col(value_col: str) -> Column:
+def _hash_cols(value_col: str) -> list[Column]:
     # JVM-side 64-bit hashing — only the hashes cross into Arrow batches.
-    # xxhash64(NULL) returns the SEED (42), not NULL, which would count
-    # NULL as one extra distinct; ClickHouse uniq skips NULLs, so gate on
-    # isNotNull first.
+    # xxhash64(NULL) returns the SEED (42), which would count NULL as one
+    # extra distinct; ClickHouse uniq skips NULLs, so a validity column
+    # travels alongside (a NULL hash would turn the whole batch's int64
+    # hashes into lossy float64 on the pandas side).
     c = F.col(value_col)
-    return F.when(c.isNotNull(), F.xxhash64(c))
+    return [F.xxhash64(c), c.isNotNull()]
+
+
+def _sketch(
+    df: DataFrame, group_cols: list[str], value_col: str, fold, schema: str
+) -> DataFrame:
+    """Run ``fold(hashes) -> state`` over each group's non-NULL value hashes."""
+    return per_key(
+        df, group_cols, _hash_cols(value_col),
+        lambda h, ok: [(fold(h[ok]),)], schema,
+    )
 
 
 def uniq_state(df: DataFrame, group_cols: list[str], value_col: str) -> DataFrame:
     """uniqState: one serialized HLL per group over value_col."""
-    hashed = df.select(*group_cols, _hash_col(value_col).alias("__h"))
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = {c: [pdf[c].iloc[0]] for c in group_cols}
-        keys["uniq_state"] = [
-            _registers_from_hashes(pdf["__h"].dropna().to_numpy()).tobytes()
-        ]
-        return pd.DataFrame(keys)
-
-    key_schema = ", ".join(
-        f"{c} {df.schema[c].dataType.simpleString()}" for c in group_cols
-    )
-    return hashed.groupBy(*group_cols).applyInPandas(
-        kernel, schema=f"{key_schema}, uniq_state binary"
+    return _sketch(
+        df, group_cols, value_col,
+        lambda h: _registers_from_hashes(h).tobytes(), "uniq_state binary",
     )
 
 
@@ -103,22 +107,11 @@ def uniq_merge(
 ) -> DataFrame:
     """uniqMerge: register-wise max of partial HLL states per group."""
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = {c: [pdf[c].iloc[0]] for c in group_cols}
-        stacked = np.stack(
-            [np.frombuffer(b, dtype=np.uint8) for b in pdf[state_col]]
-        )
-        keys[state_col] = [np.max(stacked, axis=0).tobytes()]
-        return pd.DataFrame(keys)
+    def merge(states: np.ndarray) -> list:
+        stacked = np.stack([np.frombuffer(b, dtype=np.uint8) for b in states])
+        return [(np.max(stacked, axis=0).tobytes(),)]
 
-    key_schema = ", ".join(
-        f"{c} {df.schema[c].dataType.simpleString()}" for c in group_cols
-    )
-    return (
-        df.select(*group_cols, state_col)
-        .groupBy(*group_cols)
-        .applyInPandas(kernel, schema=f"{key_schema}, {state_col} binary")
-    )
+    return per_key(df, group_cols, [state_col], merge, f"{state_col} binary")
 
 
 @F.pandas_udf(T.LongType())
@@ -160,18 +153,8 @@ def _theta_estimate(state: np.ndarray, k: int = THETA_K) -> int:
 
 def theta_state(df: DataFrame, group_cols: list[str], value_col: str) -> DataFrame:
     """thetaSketchState: per group, the KMV sketch of distinct value hashes."""
-    hashed = df.select(*group_cols, _hash_col(value_col).alias("__h"))
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = {c: [pdf[c].iloc[0]] for c in group_cols}
-        keys["theta_state"] = [_theta_from_hashes(pdf["__h"].dropna().to_numpy())]
-        return pd.DataFrame(keys)
-
-    key_schema = ", ".join(
-        f"{c} {df.schema[c].dataType.simpleString()}" for c in group_cols
-    )
-    return hashed.groupBy(*group_cols).applyInPandas(
-        kernel, schema=f"{key_schema}, theta_state binary"
+    return _sketch(
+        df, group_cols, value_col, _theta_from_hashes, "theta_state binary"
     )
 
 
@@ -180,20 +163,11 @@ def theta_merge(
 ) -> DataFrame:
     """thetaSketchMerge: union-then-truncate of KMV states per group."""
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = {c: [pdf[c].iloc[0]] for c in group_cols}
-        arrays = [np.frombuffer(b, dtype=np.uint64) for b in pdf[state_col]]
-        keys[state_col] = [_theta_merge_arrays(arrays)]
-        return pd.DataFrame(keys)
+    def merge(states: np.ndarray) -> list:
+        arrays = [np.frombuffer(b, dtype=np.uint64) for b in states]
+        return [(_theta_merge_arrays(arrays),)]
 
-    key_schema = ", ".join(
-        f"{c} {df.schema[c].dataType.simpleString()}" for c in group_cols
-    )
-    return (
-        df.select(*group_cols, state_col)
-        .groupBy(*group_cols)
-        .applyInPandas(kernel, schema=f"{key_schema}, {state_col} binary")
-    )
+    return per_key(df, group_cols, [state_col], merge, f"{state_col} binary")
 
 
 @F.pandas_udf(T.LongType())
@@ -248,24 +222,20 @@ def adaptive_histogram(
         .agg(F.count(F.lit(1)).alias("__w"))
     )
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = {c: [pdf[c].iloc[0]] for c in group_cols}
+    def bins_of(v: np.ndarray, w: np.ndarray) -> list:
         bins = adaptive_histogram_core(
-            pdf["__v"].to_numpy(np.float64),
-            pdf["__w"].to_numpy(np.float64),
+            np.asarray(v, dtype=np.float64), np.asarray(w, dtype=np.float64),
             max_bins,
         )
-        keys["bin_means"] = ["|".join(f"{m:.6f}" for m, _ in bins)]
-        keys["bin_weights"] = ["|".join(f"{x:.1f}" for _, x in bins)]
-        keys["n_bins"] = [len(bins)]
-        return pd.DataFrame(keys)
+        return [(
+            "|".join(f"{m:.6f}" for m, _ in bins),
+            "|".join(f"{x:.1f}" for _, x in bins),
+            len(bins),
+        )]
 
-    key_schema = ", ".join(
-        f"{c} {df.schema[c].dataType.simpleString()}" for c in group_cols
-    )
-    return counted.groupBy(*group_cols).applyInPandas(
-        kernel,
-        schema=f"{key_schema}, bin_means string, bin_weights string, n_bins long",
+    return per_key(
+        counted, group_cols, ["__v", "__w"], bins_of,
+        "bin_means string, bin_weights string, n_bins long",
     )
 
 
@@ -313,19 +283,10 @@ def uniq_combined(
     itself must be stored/rolled up).  Standard error ~1.04/sqrt(2^K)."""
     if not 12 <= precision <= 20:
         raise ValueError("uniqCombined precision must be in [12, 20]")
-    hashed = df.select(*group_cols, _hash_col(value_col).alias("__h"))
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = {c: [pdf[c].iloc[0]] for c in group_cols}
-        regs = _registers_p(pdf["__h"].dropna().to_numpy(), precision)
-        keys[out_col] = [_estimate_p(regs, precision)]
-        return pd.DataFrame(keys)
-
-    key_schema = ", ".join(
-        f"{c} {df.schema[c].dataType.simpleString()}" for c in group_cols
-    )
-    return hashed.groupBy(*group_cols).applyInPandas(
-        kernel, schema=f"{key_schema}, {out_col} long"
+    return _sketch(
+        df, group_cols, value_col,
+        lambda h: _estimate_p(_registers_p(h, precision), precision),
+        f"{out_col} long",
     )
 
 

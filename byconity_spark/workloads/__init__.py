@@ -233,10 +233,12 @@ _ROWS_ONLY_LAST = ["mm_decode_features", "sample_lineitem"]
 # fix registers as a NEW query (chsql_infix_mod, fresh tier → first).
 _MUST_RECERTIFY: list[str] = []
 
-# the 50 queries CORRECTNESS_r10 certified — they rotate to the BACK of
-# the certified tier this round (least-recently-certified first)
-# r12 greens (CORRECTNESS_r12: 50/50) — most recently certified, they
-# rotate to the very back of the certified tier this round
+# Recency ladder for the certified tier: _R12_GREEN.._R09_GREEN hold the
+# queries the r12, r11, r10 and r09 correctness runs certified
+# (CORRECTNESS_r12: 50/50).  A query sorts by its most recent rung — r12
+# greens at the very back, then r11, r10, r09, and queries certified
+# before r09 first — so a capped run re-confirms the least-recently
+# certified queries first.
 _R12_GREEN = {
     "chsql_date_shift", "chsql_int_div_zero", "chsql_empty_set_aggs",
     "chsql_rollup_defaults", "chsql_totals_last", "chsql_ttl_prune_read",
@@ -303,8 +305,7 @@ _R10_GREEN = {
     "mm_keyframes", "mm_resize_thumbnail",
 }
 
-# r09 greens (kept for the two-round recency ladder: r10 greens sort
-# last, r09 next-to-last, everything older re-confirms first)
+# r09 greens: the oldest rung of the recency ladder above
 _R09_GREEN = {
     "chsql_map_byte_ops", "chsql_mann_whitney", "chsql_dialect8b_suite",
     "beh_attr_analysis_counts", "beh_attr_analysis_first",
@@ -389,9 +390,9 @@ def all_queries() -> dict[str, QueryDef]:
         n for n in _REGISTRY
         if n in _PREVIOUSLY_CERTIFIED and n not in set(recert) and n not in set(last)
     ]
-    # rotation: queries the r09 driver just certified sort LAST within
-    # the certified tier so a capped run re-confirms the LEAST-recently
-    # certified queries first
+    # rotation: the four-rung recency ladder (r12 greens last, then r11,
+    # r10, r09) so a capped run re-confirms the LEAST-recently certified
+    # queries first
     certified.sort(
         key=lambda n: (4 if n in _R12_GREEN else
                        3 if n in _R11_GREEN else

@@ -512,20 +512,22 @@ def test_funnel_path_split_by_times_multi_anchor(spark):
     }
 
 
-def test_adaptive_buckets_scale_with_input_size(spark):
+def test_adaptive_buckets_scale_with_input_size(spark, monkeypatch):
     """Bucket/partition counts derive from the optimizer's size estimate
-    (guide §2: scale-adaptive partitioning): partitions floored at 8 (a
-    tiny kernel shuffle must not serialize a CPU-heavy Python kernel),
+    (guide §2: scale-adaptive partitioning): partitions floored at one
+    per core (a tiny kernel shuffle must not serialize a CPU-heavy Python
+    kernel),
     growing with input past ~32 MB/task; buckets = 4x partitions so the
     bucket hash spreads — and the bucketed result set is identical at
     any count."""
     from byconity_spark.engine.catalog import load_table
-    from byconity_spark.udafs.behavioral import (
+    from byconity_spark.udafs import kernel
+    from byconity_spark.udafs.behavioral import window_funnel
+    from byconity_spark.udafs.kernel import (
         _BUCKET_TARGET_BYTES,
         _BUCKETS_PER_TASK,
         _MIN_KERNEL_TASKS,
         _kernel_layout,
-        window_funnel,
     )
     from tests.conftest import SF_DIR
 
@@ -547,10 +549,12 @@ def test_adaptive_buckets_scale_with_input_size(spark):
             ev, window_us=7 * day, steps=["signup", "click", "purchase"]
         ).collect())
     )
+    # a 16-task floor lays the same input out over 64 buckets
+    monkeypatch.setattr(kernel, "_MIN_KERNEL_TASKS", 16)
+    assert _kernel_layout(ev) == (64, 16)
     fixed64 = sorted(
         map(tuple, window_funnel(
             ev, window_us=7 * day, steps=["signup", "click", "purchase"],
-            n_buckets=64,
         ).collect())
     )
     assert adaptive == fixed64
@@ -561,7 +565,7 @@ def test_kernel_layout_unknown_estimate_falls_back_to_parallelism(spark):
     (~Long.MaxValue) as its size estimate — the layout must treat that as
     'unknown' and fall back to the parallelism floor, never turn it into
     a quarter-million-task shuffle."""
-    from byconity_spark.udafs.behavioral import _BUCKETS_PER_TASK, _kernel_layout
+    from byconity_spark.udafs.kernel import _BUCKETS_PER_TASK, _kernel_layout
 
     df = spark.createDataFrame(
         [(1, 100)], "event_id long, user_id long"
@@ -573,18 +577,48 @@ def test_kernel_layout_unknown_estimate_falls_back_to_parallelism(spark):
     assert (nb, nparts) == (_BUCKETS_PER_TASK * par, par)
 
 
-def test_bucketed_kernel_single_exchange_pinned_parallelism(spark):
+def _window_funnel_entry(ev):
+    from byconity_spark.udafs.behavioral import window_funnel
+
+    return window_funnel(ev, window_us=7 * 86_400_000_000, steps=["signup", "click"])
+
+
+def _attribution_entry(ev):
+    from byconity_spark.udafs.attribution import attribution_analysis_partials
+
+    return attribution_analysis_partials(
+        ev, target_event="purchase", touch_events=["click"], back_time_ms=1000
+    )
+
+
+def _group_bitmap_entry(ev):
+    from byconity_spark.udafs.bitmaps import group_bitmap
+
+    return group_bitmap(ev, ["event_type"], "user_id")
+
+
+def _uniq_state_entry(ev):
+    from byconity_spark.udafs.sketches import uniq_state
+
+    return uniq_state(ev, ["event_type"], "user_id")
+
+
+@pytest.mark.parametrize(
+    "entry",
+    [_window_funnel_entry, _attribution_entry, _group_bitmap_entry, _uniq_state_entry],
+    ids=["behavioral", "attribution", "bitmaps", "sketches"],
+)
+def test_bucketed_kernel_single_exchange_pinned_parallelism(spark, entry):
     """The bucketed kernel scaffold must shuffle exactly once: the explicit
     repartition(P, __b) both pins the kernel stage's parallelism (AQE's
     byte-based coalescing would run CPU-heavy Python kernels in ONE task)
     and satisfies groupBy(__b)'s clustering, so no second exchange."""
     from byconity_spark.engine.catalog import load_table
-    from byconity_spark.udafs.behavioral import _kernel_layout, window_funnel
+    from byconity_spark.udafs.kernel import _kernel_layout
     from tests.conftest import SF_DIR
 
     ev = load_table(spark, SF_DIR, "events")
-    day = 86_400_000_000
-    df = window_funnel(ev, window_us=7 * day, steps=["signup", "click"])
+    df = entry(ev)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1
     assert "FlatMapGroupsInPandas" in plan
